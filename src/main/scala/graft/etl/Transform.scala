@@ -396,38 +396,4 @@ object Transform {
 
     TransformedCollection(target, auditDf, base)
   }
-
-  /** Diagnostic variant used by the oracle query: target columns plus
-    * the audit-derived columns in one flat DataFrame (no timestamp, so
-    * the output is deterministic).
-    */
-  def transformFlat(
-      raw: DataFrame,
-      rawCol: String,
-      cm: CollectionMapping,
-      runtime: RuntimeConfig,
-      audit: AuditSettings): DataFrame = {
-    val ext = parseStage(extractAttrs(raw, rawCol, cm), cm, runtime)
-    val attrs = cm.mappings.toSeq.zipWithIndex.map { case ((attr, am), i) =>
-      attrExprs(col(vgCol(i)),
-        if (needsParse(am)) Some(col(pCol(i))) else None, attr, am, runtime)
-    }
-    val staged = stagedValues(ext, rawCol, attrs)
-    staged.select(
-      attrs.map(a => col(a.targetColumn)) ++
-        Seq(
-          col(RawCol).as(cm.rawJsonColumn),
-          to_json(stagedMissingColumns(attrs)).as("missing_columns"),
-          stagedErrors(attrs).as("__errors"),
-          col(OidCol).as("object_id")): _*)
-      .select(
-        attrs.map(a => col(a.targetColumn)) ++
-          Seq(
-            col(cm.rawJsonColumn),
-            col("missing_columns"),
-            size(col("__errors")).as("n_errors"),
-            when(size(col("__errors")) > 0, audit.statusValues("error"))
-              .otherwise(audit.statusValues("success")).as("status"),
-            col("object_id")): _*)
-  }
 }

@@ -5,6 +5,7 @@ import java.util.Properties
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
 
 /** The sink plane (K1–K5). The pipeline writes through this interface so
   * tests run against Parquet while production targets Postgres over
@@ -18,6 +19,19 @@ trait TableSink {
   def createSchema(schemaName: String): Unit
   def createTable(tableName: String, columns: Seq[ColumnDef]): Unit
   def append(df: DataFrame, tableName: String): Unit
+}
+
+object TableSink {
+  /** Array columns → JSON text, the JSONB wire convention the parquet
+    * and JDBC sinks land (the audit table's `missing_columns`).
+    */
+  private[etl] def arraysToJson(df: DataFrame): DataFrame =
+    df.schema.fields.foldLeft(df) { (acc, f) =>
+      f.dataType match {
+        case _: ArrayType => acc.withColumn(f.name, to_json(col(f.name)))
+        case _ => acc
+      }
+    }
 }
 
 /** Test/local sink: one parquet directory per table under `baseDir`
@@ -41,16 +55,9 @@ final class ParquetSink(baseDir: String) extends TableSink {
     val _ = Files.createDirectories(dir(tableName))
   }
 
-  override def append(df: DataFrame, tableName: String): Unit = {
-    val jsonified = df.schema.fields.foldLeft(df) { (acc, f) =>
-      f.dataType match {
-        case _: org.apache.spark.sql.types.ArrayType =>
-          acc.withColumn(f.name, to_json(col(f.name)))
-        case _ => acc
-      }
-    }
-    jsonified.write.mode("append").parquet(dir(tableName).toString)
-  }
+  override def append(df: DataFrame, tableName: String): Unit =
+    TableSink.arraysToJson(df).write.mode("append")
+      .parquet(dir(tableName).toString)
 
   def read(spark: org.apache.spark.sql.SparkSession, tableName: String): DataFrame =
     spark.read.parquet(dir(tableName).toString)
@@ -193,17 +200,9 @@ final class JdbcPostgresSink(db: DatabaseConfig, batchSize: Int = 10000)
       val _ = st.execute(SchemaManager.createTableSql(tableName, columns))
     }
 
-  override def append(df: DataFrame, tableName: String): Unit = {
-    val jsonified = df.schema.fields.foldLeft(df) { (acc, f) =>
-      f.dataType match {
-        case _: org.apache.spark.sql.types.ArrayType =>
-          acc.withColumn(f.name, to_json(col(f.name)))
-        case _ => acc
-      }
-    }
-    jsonified.write
+  override def append(df: DataFrame, tableName: String): Unit =
+    TableSink.arraysToJson(df).write
       .mode("append")
       .option("batchsize", batchSize)
       .jdbc(url, tableName, props)
-  }
 }

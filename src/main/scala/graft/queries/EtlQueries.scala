@@ -119,9 +119,16 @@ object EtlQueries {
     // identical correctly-rounded conversion in both engines.
     "q11_etl_transform" -> QuerySpec(
       (s, dir) =>
-        Transform.transformFlat(
-          rawOrdersDocs(s, dir), "raw", ordersMapping,
-          EtlDefaults.runtime, EtlDefaults.audit)
+        Transform.transformCollection(
+          rawOrdersDocs(s, dir), "raw", "orders", ordersMapping,
+          EtlDefaults.runtime, EtlDefaults.audit).shared
+          .select(ordersMapping.mappings.values.map(m => col(m.column)).toSeq ++
+            Seq(
+              col("__raw").as(ordersMapping.rawJsonColumn),
+              to_json(col("__missing_columns")).as("missing_columns"),
+              size(col("__errors")).as("n_errors"),
+              col("__status").as("status"),
+              col("__object_id").as("object_id")): _*)
           .withColumn("amount", col("amount").cast("double"))
           .withColumn("amount2", col("amount2").cast("double"))
           .orderBy("order_id"),

@@ -69,23 +69,13 @@ final class PgWireClient private (socket: Socket, in: DataInputStream,
     QueryResult(cols, rows.result(), tags.result())
   }
 
-  /** Execute a `COPY ... FROM STDIN` (text format): stream the
-    * already-encoded text lines (no trailing newline per line — added
-    * here), batched into ~64 KiB CopyData messages. Returns the number
-    * of lines sent after the server confirms CommandComplete.
-    */
-  def copyIn(copySql: String, lines: Iterator[String]): Long = {
-    val stream = copyInBegin(copySql)
-    lines.foreach(stream.send)
-    stream.finish()
-  }
-
-  /** Incremental COPY IN for callers that receive rows one at a time
-    * (the DSv2 [[DataWriter]] contract: `write(row)` calls arrive
-    * individually, with commit/abort decided later by Spark's commit
-    * coordinator): [[copyInBegin]] → `send` per line → `finish` to
+  /** `COPY ... FROM STDIN` (text format), streamed one row at a time —
+    * the DSv2 `DataWriter` contract, where `write(row)` calls arrive
+    * individually and commit/abort is decided later by Spark's commit
+    * coordinator: [[copyInBegin]] → `send` per line → `finish` to
     * complete the statement, or drop the connection to abort it (the
-    * server rolls the COPY back with its transaction).
+    * server rolls the COPY back with its transaction). Lines are
+    * batched into ~64 KiB CopyData messages.
     */
   final class CopyInStream private[PgWireClient] () {
     private var n = 0L

@@ -7,9 +7,11 @@ import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 
+import graft.etl.PgConn
+
 /** DSv2 write path over the Postgres wire protocol — the `SupportsWrite`
-  * half of [[PgWireTable]], promoting [[graft.etl.PgWireSink]]'s library
-  * `appendExactlyOnce` protocol to Spark's standard write surface:
+  * half of [[PgWireTable]], and the one place rows are streamed into
+  * Postgres with COPY ([[graft.etl.PgWireSink]]'s appends run through it):
   *
   * {{{
   * df.write.format("graft.sources.PgWireSource")
@@ -18,34 +20,49 @@ import org.apache.spark.sql.types._
   *   .mode("append").save()
   * }}}
   *
+  * COPY + ledger protocol. Every non-empty partition opens its own
+  * connection (an empty one never connects) and, with the ledger on
+  * (the default), runs
+  *
+  * {{{ BEGIN; INSERT INTO <ledger>(batch_id, partition_id); COPY …;
+  *     UPDATE <ledger> SET n_rows = <n>; COMMIT }}}
+  *
+  * with `PRIMARY KEY (batch_id, partition_id)` on the ledger table
+  * (`graft_meta.copy_ledger` unless `ledgerTable` says otherwise,
+  * created driver-side once per job by [[PgWriteSupport.ensureLedger]]):
+  *   - a duplicate attempt hits unique_violation (23505) on the claim,
+  *     before any row is streamed, and commits as a no-op;
+  *   - a concurrent duplicate (speculation) blocks on the first
+  *     attempt's uncommitted claim and resolves to 23505 or a clean run
+  *     depending on whether the first commits or aborts;
+  *   - a task that dies mid-COPY drops its connection, the server aborts
+  *     the transaction and the claim vanishes with it, so the retry
+  *     starts clean.
   * Spark's commit coordinator (`useCommitCoordinator = true`) authorizes
-  * exactly one task attempt per partition to commit, and the ledger —
-  * `INSERT INTO <ledger>(batch_id, partition_id)` claimed inside the
-  * same transaction as the COPY, `PRIMARY KEY (batch_id, partition_id)`
-  * — closes the residual window the coordinator cannot see (a task that
-  * committed in Postgres but died before reporting; a whole job re-run
-  * with the same `batchId`): a duplicate claim hits unique_violation
-  * BEFORE any data is streamed and the attempt no-ops. A task that dies
-  * mid-COPY drops its connection; the server aborts the transaction and
-  * the ledger claim vanishes with it, so the retry starts clean — the
-  * same three-way arbitration [[graft.etl.PgWireSink.appendExactlyOnce]]
-  * proves at the wire level (PgLiveRoundTripSpec), now driven by Spark's
-  * own coordinator through `df.write`/`df.writeTo`.
+  * one attempt per partition to finish its COPY; the ledger closes the
+  * windows the coordinator cannot see — a task that committed in
+  * Postgres but died before reporting, and a whole job re-run with the
+  * same `batchId`. Postgres is the arbiter, so the driver-side job
+  * commit has nothing left to do.
   *
   * `batchId` defaults to the query's own id (fresh per run): in-job
   * retries and speculation dedup, distinct jobs append independently.
-  * Pass a caller-stable id (orchestrator run key, foreachBatch epoch)
-  * for cross-run exactly-once; `ledger=false` opts down to plain
-  * transactional COPY (the `append` contract — what `write.jdbc` gives).
+  * A caller-stable id (an orchestrator run key, a `foreachBatch` epoch)
+  * makes a re-delivered batch dedup per partition, provided the frame's
+  * partition contents are deterministic (same plan over the same input;
+  * repartition by a key column, not round-robin). `ledger=false` drops
+  * the claim: each partition is one bare COPY, which is its own implicit
+  * transaction — the `write.jdbc` contract, where a task re-run after
+  * its COPY committed appends again. Ledger rows accumulate one per
+  * partition per batch; [[graft.etl.PgWireSink.vacuumLedger]] retires
+  * them past the re-delivery horizon.
   *
-  * Values ride as COPY text rendered from the typed InternalRow
-  * (timestamps as ISO-8601 UTC instants, decimals as plain strings,
-  * bytea as `\x` hex, arrays as JSON text into JSONB targets — the same
-  * convention as the library sinks); rendering is validated against the
-  * input schema at build() time so unsupported nesting fails at plan
-  * time, not mid-COPY.
+  * Values ride as COPY text rendered from the typed InternalRow by
+  * [[PgRowText]]; rendering is validated against the input schema at
+  * build() time, so unsupported nesting fails at plan time, not
+  * mid-COPY.
   */
-final class PgWriteBuilder(conn: PgWireSource.Conn, table: String,
+final class PgWriteBuilder(conn: PgConn, table: String,
     info: LogicalWriteInfo) extends WriteBuilder with SupportsTruncate {
 
   private var truncateFirst = false
@@ -75,7 +92,7 @@ final class PgWriteBuilder(conn: PgWireSource.Conn, table: String,
   }
 }
 
-final class PgWrite(conn: PgWireSource.Conn, table: String,
+final class PgWrite(conn: PgConn, table: String,
     schema: StructType, batchId: String, ledgerTable: Option[String],
     truncateFirst: Boolean = false)
     extends Write {
@@ -83,10 +100,9 @@ final class PgWrite(conn: PgWireSource.Conn, table: String,
     new PgBatchWrite(conn, table, schema, batchId, ledgerTable, truncateFirst)
 
   /** Native streaming sink: each micro-batch's writers claim
-    * `<batchId>-epoch-<epochId>` ledger slots, so a batch REPLAYED
-    * from the checkpoint (restart after a post-commit crash — the
-    * exact window `foreachBatch` + `appendExactlyOnce` closes by hand)
-    * dedups per partition with no user code. `batchId` defaults to
+    * `<batchId>-epoch-<epochId>` ledger slots, so a batch replayed
+    * from the checkpoint (restart after a post-commit crash) dedups per
+    * partition with no user code. `batchId` defaults to
     * Spark's query id, which the checkpoint keeps stable across
     * restarts — pass an explicit `batchId` option to survive a
     * checkpoint swap too. Append output mode only: Complete-mode
@@ -104,7 +120,7 @@ final class PgWrite(conn: PgWireSource.Conn, table: String,
       (if (truncateFirst) " truncate" else "")
 }
 
-final class PgStreamingWrite(conn: PgWireSource.Conn, table: String,
+final class PgStreamingWrite(conn: PgConn, table: String,
     schema: StructType, baseBatchId: String, ledgerTable: Option[String])
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
 
@@ -117,10 +133,8 @@ final class PgStreamingWrite(conn: PgWireSource.Conn, table: String,
     PgStreamingDataWriterFactory(conn, table, schema, baseBatchId, ledgerTable)
   }
 
-  /** Per-epoch commits already landed (or no-opped) in Postgres under
-    * their epoch-scoped claims; Spark's checkpoint commit is the
-    * progress marker, the database is the dedup arbiter — the pairing
-    * that makes a replayed epoch a per-partition no-op.
+  /** Spark's checkpoint commit is the progress marker and Postgres the
+    * dedup arbiter, so a replayed epoch is a per-partition no-op.
     */
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = ()
@@ -128,7 +142,7 @@ final class PgStreamingWrite(conn: PgWireSource.Conn, table: String,
       messages: Array[WriterCommitMessage]): Unit = ()
 }
 
-final case class PgStreamingDataWriterFactory(conn: PgWireSource.Conn,
+final case class PgStreamingDataWriterFactory(conn: PgConn,
     table: String, schema: StructType, baseBatchId: String,
     ledgerTable: Option[String])
     extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
@@ -138,21 +152,15 @@ final case class PgStreamingDataWriterFactory(conn: PgWireSource.Conn,
       ledgerTable, partitionId)
 }
 
-final class PgBatchWrite(conn: PgWireSource.Conn, table: String,
+final class PgBatchWrite(conn: PgConn, table: String,
     schema: StructType, batchId: String, ledgerTable: Option[String],
     truncateFirst: Boolean = false)
     extends BatchWrite {
 
-  /** One attempt per partition gets the coordinator's commit grant;
-    * the ledger then arbitrates what the coordinator cannot observe.
-    */
   override def useCommitCoordinator(): Boolean = true
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory = {
-    // Driver-side, once per job: the ledger table must exist before any
-    // executor claims into it (CREATE ... IF NOT EXISTS per partition
-    // would race inside the claim transactions).
     ledgerTable.foreach(lt => PgWriteSupport.ensureLedger(conn, lt))
     if (truncateFirst) {
       // Overwrite = truncate-then-append (the write.jdbc contract).
@@ -168,28 +176,18 @@ final class PgBatchWrite(conn: PgWireSource.Conn, table: String,
       try {
         val _ = c.query(s"TRUNCATE TABLE ${PgWireSource.quoteTable(table)}")
         ledgerTable.foreach { lt =>
-          val batchLit = "'" + batchId.replace("'", "''") + "'"
           val _2 = c.query(s"DELETE FROM ${PgWireSource.quoteTable(lt)} " +
-            s"WHERE batch_id = $batchLit")
+            s"WHERE batch_id = ${PgWireSource.sqlLit(batchId)}")
         }
       } finally c.close()
     }
     PgDataWriterFactory(conn, table, schema, batchId, ledgerTable)
   }
 
-  /** Each partition's transaction already committed (or no-opped) in
-    * Postgres under its ledger claim; there is nothing left to flip
-    * atomically — the database is the arbiter, which is exactly what
-    * makes the protocol survive driver death between task success and
-    * job commit.
+  /** Postgres is the arbiter ([[PgWriteBuilder]]): committed partitions
+    * keep their claims, uncommitted ones died with their connections.
     */
   override def commit(messages: Array[WriterCommitMessage]): Unit = ()
-
-  /** Uncommitted transactions died with their connections (abort() or
-    * task death closes the socket; the server rolls back); committed
-    * partitions keep their ledger claims so a re-run with the same
-    * batchId no-ops them instead of double-writing.
-    */
   override def abort(messages: Array[WriterCommitMessage]): Unit = ()
 }
 
@@ -201,7 +199,7 @@ private[sources] object PgWriteSupport {
     * before any executor claims into it (per-partition CREATE IF NOT
     * EXISTS would race inside the claim transactions).
     */
-  def ensureLedger(conn: PgWireSource.Conn, ledgerTable: String): Unit = {
+  def ensureLedger(conn: PgConn, ledgerTable: String): Unit = {
     val (ledgerSchema, _) = graft.etl.SchemaScript.splitTableName(ledgerTable)
     val c = conn.open()
     try {
@@ -218,7 +216,7 @@ private[sources] object PgWriteSupport {
   }
 }
 
-final case class PgDataWriterFactory(conn: PgWireSource.Conn,
+final case class PgDataWriterFactory(conn: PgConn,
     table: String, schema: StructType, batchId: String,
     ledgerTable: Option[String]) extends DataWriterFactory {
   override def createWriter(partitionId: Int,
@@ -226,7 +224,7 @@ final case class PgDataWriterFactory(conn: PgWireSource.Conn,
     new PgDataWriter(conn, table, schema, batchId, ledgerTable, partitionId)
 }
 
-final class PgDataWriter(conn: PgWireSource.Conn, table: String,
+final class PgDataWriter(conn: PgConn, table: String,
     schema: StructType, batchId: String, ledgerTable: Option[String],
     partitionId: Int) extends DataWriter[InternalRow] {
 
@@ -242,31 +240,27 @@ final class PgDataWriter(conn: PgWireSource.Conn, table: String,
   private var duplicate = false
   private var started = false
 
-  /** Lazy on the first row (an empty partition never connects — the
-    * same contract as the library sink's `rows.hasNext` guard): claim
-    * the ledger slot inside BEGIN, then open the COPY stream. A lost
-    * claim (23505) means another attempt of this (batch, partition)
-    * already committed — swallow rows and no-op.
+  private val batchLit = PgWireSource.sqlLit(batchId)
+
+  /** Lazy on the first row, so an empty partition never connects: claim
+    * the ledger slot inside BEGIN (when the ledger is on), then open the
+    * COPY stream. A lost claim (23505) means another attempt of this
+    * (batch, partition) already committed — swallow rows and no-op.
     */
   private def begin(): Unit = {
     started = true
     client = conn.open()
-    ledgerTable match {
-      case Some(lt) =>
-        val ledger = PgWireSource.quoteTable(lt)
-        val batchLit = "'" + batchId.replace("'", "''") + "'"
-        try {
-          val _ = client.query(
-            s"""BEGIN;
-                INSERT INTO $ledger (batch_id, partition_id)
-                VALUES ($batchLit, $partitionId)""")
-        } catch {
-          case e: PgWireClient.PgServerException if e.sqlState == "23505" =>
-            val _ = client.query("ROLLBACK")
-            duplicate = true
-        }
-      case None =>
-        val _ = client.query("BEGIN")
+    ledgerTable.foreach { lt =>
+      try {
+        val _ = client.query(
+          s"""BEGIN;
+              INSERT INTO ${PgWireSource.quoteTable(lt)} (batch_id, partition_id)
+              VALUES ($batchLit, $partitionId)""")
+      } catch {
+        case e: PgWireClient.PgServerException if e.sqlState == "23505" =>
+          val _ = client.query("ROLLBACK")
+          duplicate = true
+      }
     }
     if (!duplicate) stream = client.copyInBegin(copySql)
   }
@@ -288,15 +282,11 @@ final class PgDataWriter(conn: PgWireSource.Conn, table: String,
       if (duplicate) PgCommitMessage(partitionId, 0L, deduped = true)
       else {
         val n = stream.finish()
-        val _ = ledgerTable match {
-          case Some(lt) =>
-            val ledger = PgWireSource.quoteTable(lt)
-            val batchLit = "'" + batchId.replace("'", "''") + "'"
-            client.query(
-              s"""UPDATE $ledger SET n_rows = $n
-                  WHERE batch_id = $batchLit AND partition_id = $partitionId;
-                  COMMIT""")
-          case None => client.query("COMMIT")
+        ledgerTable.foreach { lt =>
+          val _ = client.query(
+            s"""UPDATE ${PgWireSource.quoteTable(lt)} SET n_rows = $n
+                WHERE batch_id = $batchLit AND partition_id = $partitionId;
+                COMMIT""")
         }
         PgCommitMessage(partitionId, n, deduped = false)
       }
@@ -314,13 +304,13 @@ final class PgDataWriter(conn: PgWireSource.Conn, table: String,
 }
 
 /** InternalRow → COPY text rendering, one converter per column, chosen
-  * once from the schema (no per-row type dispatch). Conventions match
-  * the library sinks' plan-side `cast(string)`/`to_json`:
-  * timestamps render as ISO-8601 UTC instants (PG's timestamptz input
-  * accepts the `T`/`Z` forms), dates as `yyyy-MM-dd`, decimals as plain
-  * (non-scientific) strings, booleans as true/false, bytea as `\x` hex
-  * (COPY escaping doubles the backslash on the wire), arrays of atomic
-  * types as JSON text for JSONB targets.
+  * once from the schema (no per-row type dispatch). Atomic values render
+  * as Spark's `cast(string)` does and arrays of atomic types as `to_json`
+  * does (JSON text for JSONB targets) — the text the parquet and JDBC
+  * sinks land; PgRowTextParitySpec pins this. The exceptions: timestamps
+  * render as ISO-8601 UTC instants whatever the session time zone (PG's
+  * timestamptz input accepts the `T`/`Z` forms), and bytea as `\x` hex
+  * (COPY escaping doubles the backslash on the wire).
   */
 private[sources] object PgRowText {
 
@@ -429,7 +419,9 @@ private[sources] object PgRowText {
         case '\n' => sb.append("\\n")
         case '\r' => sb.append("\\r")
         case '\t' => sb.append("\\t")
-        case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
+        case '\b' => sb.append("\\b")
+        case '\f' => sb.append("\\f")
+        case c if c < ' ' => sb.append(f"\\u${c.toInt}%04X")
         case c => sb.append(c)
       }
       i += 1

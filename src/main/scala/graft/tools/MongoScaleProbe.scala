@@ -3,8 +3,7 @@ package graft.tools
 import graft.queries.MongoFixtures
 import graft.sources.MongoSource
 
-/** Mongo wire-plane scale probe (the [[CopyProbe]] sibling for the S2
-  * read path): measured cursor-per-partition throughput of the
+/** Mongo wire-plane scale probe for the S2 read path: measured cursor-per-partition throughput of the
   * partitioned wire read and the DSv2 scan, 1 → 8 cursors, across
   * scale decades. The claim under test is cursor-per-partition
   * scaling: each Spark partition drives its own `find`/`getMore`
@@ -12,7 +11,7 @@ import graft.sources.MongoSource
   * BSON decode + reference-JSON render, resp. typed InternalRow
   * conversion) should grow with partitions until the serving side
   * saturates. The fake server is in-process and answers from memory —
-  * like CopyProbe this measures the CLIENT plane's ability to feed
+  * this measures the CLIENT plane's ability to feed
   * Spark, not a remote server's disk; on a real deployment the server
   * side is also parallel (sharded mongos or a replica set).
   *

@@ -29,8 +29,8 @@ import graft.SparkTestSession
 class JdbcStatementStreamSpec extends AnyFunSuite with SparkTestSession {
 
   /** Renders every sink call as the SQL statement the JDBC sink would
-    * execute. `append` replicates `JdbcPostgresSink.append`'s
-    * array→to_json conversion, then renders `batchSize`-row INSERT
+    * execute. `append` applies `JdbcPostgresSink.append`'s
+    * array→JSON conversion ([[TableSink.arraysToJson]]), then renders `batchSize`-row INSERT
     * batches in the DataFrame's column order.
     */
   private final class StatementCaptureSink(batchSize: Int) extends TableSink {
@@ -49,14 +49,7 @@ class JdbcStatementStreamSpec extends AnyFunSuite with SparkTestSession {
     }
 
     override def append(df: DataFrame, tableName: String): Unit = {
-      // same conversion JdbcPostgresSink.append applies before .jdbc()
-      val jsonified = df.schema.fields.foldLeft(df) { (acc, f) =>
-        f.dataType match {
-          case _: org.apache.spark.sql.types.ArrayType =>
-            acc.withColumn(f.name, to_json(col(f.name)))
-          case _ => acc
-        }
-      }
+      val jsonified = TableSink.arraysToJson(df)
       val cols = jsonified.columns
       val colList = cols.map(c => "\"" + c + "\"").mkString(", ")
       val rows = jsonified.collect()

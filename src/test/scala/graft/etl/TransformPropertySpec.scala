@@ -38,7 +38,7 @@ object TransformPropertySpec extends Properties("TransformProperties") {
 
   private def flat(docs: Seq[String], types: Seq[String]) = {
     import spark.implicits._
-    Transform.transformFlat(
+    TransformFlat(
       docs.toDF("raw"), "raw", cm(types), EtlDefaults.runtime, EtlDefaults.audit)
   }
 

@@ -17,7 +17,7 @@ class TransformSpec extends AnyFunSuite with SparkTestSession {
 
   private def flat(docs: Seq[String], cm: CollectionMapping) = {
     import spark.implicits._
-    Transform.transformFlat(
+    TransformFlat(
       docs.toDF("raw"), "raw", cm, EtlDefaults.runtime, EtlDefaults.audit)
   }
 

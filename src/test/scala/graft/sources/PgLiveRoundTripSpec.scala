@@ -5,11 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 import graft.etl.{ColumnDef, PgConn, PgWireSink, SchemaManager}
 
-/** Live-server round trip for the wire-protocol plane (round-14 verdict
-  * carried item #1, Postgres half): boots a real scratch PostgreSQL 15
-  * cluster (the container ships the server binaries since round 15;
-  * still no JDBC driver jar, hence [[PgWireClient]]), then drives the
-  * exact surfaces the q312 gate uses — K2 DDL against the real grammar,
+/** Live-server round trip for the wire-protocol plane: boots a real
+  * scratch PostgreSQL 15 cluster (there is no JDBC driver jar, hence
+  * [[PgWireClient]]), then drives the exact surfaces the q312 gate
+  * uses — K2 DDL against the real grammar,
   * partition-parallel COPY IN, simple-query and COPY OUT read-back —
   * and checks values, not just row counts.
   *
@@ -23,6 +22,13 @@ class PgLiveRoundTripSpec extends AnyFunSuite with SparkTestSession {
   private lazy val conn: PgConn = {
     val h = LivePostgres.get()
     PgConn(h.host, h.port, h.user, h.database)
+  }
+
+  private def copyIn(client: PgWireClient, copySql: String,
+      lines: Iterator[String]): Long = {
+    val stream = client.copyInBegin(copySql)
+    lines.foreach(stream.send)
+    stream.finish()
   }
 
   test("copy text codec round-trips gnarly values (no server)") {
@@ -56,7 +62,7 @@ class PgLiveRoundTripSpec extends AnyFunSuite with SparkTestSession {
     val client = conn.open()
     try {
       val gnarly = "line1\nline2\ttabbed \\backslash \"quoted\" ünïcode"
-      val n = client.copyIn(
+      val n = copyIn(client,
         "COPY \"graft_t\".\"rt\" (id, txt, amt, flag, d, ts, doc) FROM STDIN",
         Iterator(
           PgWireClient.encodeCopyRow(Seq(
@@ -132,6 +138,30 @@ class PgLiveRoundTripSpec extends AnyFunSuite with SparkTestSession {
     try assert(client.query("SELECT count(*) FROM graft_t.bulk")
       .rows.head.head == "10000")
     finally client.close()
+  }
+
+  test("live: append lands a TIMESTAMP as its instant whatever the session time zone") {
+    assume(LivePostgres.available, "postgres server binaries not installed")
+    val sink = new PgWireSink(conn)
+    sink.createSchema("graft_t")
+    sink.execute("DROP TABLE IF EXISTS \"graft_t\".\"tz\"")
+    sink.createTable("graft_t.tz", Seq(
+      ColumnDef("id", "INTEGER", notNull = true),
+      ColumnDef("ingested_at", "TIMESTAMPTZ")))
+
+    import org.apache.spark.sql.functions._
+    // A session of its own, so no other suite sees the zone change.
+    val ny = spark.newSession()
+    ny.conf.set("spark.sql.session.timeZone", "America/New_York")
+    val epoch = 1719835200L // 2024-07-01T12:00:00Z, 08:00 in New York
+    sink.append(ny.range(0, 1, 1, 1).select(col("id").cast("int").as("id"),
+      timestamp_seconds(lit(epoch)).as("ingested_at")), "graft_t.tz")
+
+    val c = conn.open()
+    try assert(c.query(
+      "SELECT extract(epoch FROM ingested_at)::bigint FROM graft_t.tz")
+      .rows == Seq(Seq(epoch.toString)))
+    finally c.close()
   }
 
   test("live: exactly-once append — duplicate batch no-ops, claims arbitrate, aborted claim retries clean") {
@@ -371,7 +401,7 @@ class PgLiveRoundTripSpec extends AnyFunSuite with SparkTestSession {
            CREATE TABLE graft_t.strict (id INT NOT NULL, v TEXT)""")
       val rows = (1 to 1000).map(i => s"$i\tok") :+ "\\N\tboom"
       val err = intercept[PgWireClient.PgServerException](
-        client.copyIn("COPY graft_t.strict (id, v) FROM STDIN", rows.iterator))
+        copyIn(client, "COPY graft_t.strict (id, v) FROM STDIN", rows.iterator))
       assert(err.getMessage.contains("null value"), err.getMessage)
       assert(client.query("SELECT count(*) FROM graft_t.strict")
         .rows.head.head == "0", "failed COPY must land nothing")
